@@ -110,89 +110,6 @@ def test_production_tiers_run_capped_and_keep_mutant_recall(spark):
     assert PROD_MAX_BUCKET_SIZE >= 300
 
 
-def test_grouped_path_equals_join_path(spark):
-    """lsh_candidate_pairs_grouped (one-exchange production path) emits
-    the SAME (id_a, id_b, band) rows as the join path with the same cap —
-    on the degenerate boilerplate corpus and on real fixture data."""
-    from wx20222_bigdata_spark.operators.dedup import lsh_candidate_pairs_grouped
-
-    for corpus, cap in [
-        (_boilerplate_corpus(spark), 5),
-        (_corpus_with_mutants_spark(spark, SF), 500),
-    ]:
-        for ws in (True, False):
-            bands = minhash_band_keys(corpus, whitespace=ws)
-            join_rows = {
-                tuple(r)
-                for r in lsh_candidate_pairs(bands, max_bucket_size=cap)
-                .select("id_a", "id_b", "band")
-                .collect()
-            }
-            grouped_rows = {
-                tuple(r)
-                for r in lsh_candidate_pairs_grouped(bands, max_bucket_size=cap)
-                .select("id_a", "id_b", "band")
-                .collect()
-            }
-            assert grouped_rows == join_rows
-            assert all(a < b for (a, b, _) in grouped_rows)
-
-
-def test_semijoin_cap_mode_equals_window_mode(spark):
-    """cap_mode='semijoin' (map-side-combinable count → broadcast
-    anti-join of the over-cap blacklist) must emit exactly the window
-    mode's rows — on the degenerate boilerplate corpus and on real
-    fixture data — and its plan must broadcast the blacklist (no full
-    shuffle of the band rows for the cap)."""
-    for corpus, cap in [
-        (_boilerplate_corpus(spark), 5),
-        (_corpus_with_mutants_spark(spark, SF), 500),
-    ]:
-        bands = minhash_band_keys(corpus)
-        win_rows = {
-            tuple(r)
-            for r in lsh_candidate_pairs(bands, max_bucket_size=cap)
-            .select("id_a", "id_b", "band")
-            .collect()
-        }
-        semi = lsh_candidate_pairs(bands, max_bucket_size=cap, cap_mode="semijoin")
-        semi_rows = {
-            tuple(r) for r in semi.select("id_a", "id_b", "band").collect()
-        }
-        assert semi_rows == win_rows
-        # plan-verify BOTH cap configurations (ADVICE r7: these asserts
-        # previously sat outside the loop, checking only the last corpus)
-        plan = semi._jdf.queryExecution().executedPlan().toString()
-        assert "Window" not in plan
-        assert plan.count("BroadcastHashJoin") >= 1  # the anti-join
-
-
-def test_grouped_path_plan_has_no_join(spark):
-    """The grouped path's physical plan must contain NO join operator —
-    the pairs come from the grouped bucket array — and add exactly ONE
-    hash-partitioning exchange (the bucket groupBy's) on top of whatever
-    the band-keys input itself shuffles."""
-    from wx20222_bigdata_spark.operators.dedup import lsh_candidate_pairs_grouped
-
-    bands = minhash_band_keys(_boilerplate_corpus(spark))
-    bands_plan = bands._jdf.queryExecution().executedPlan().toString()
-    plan = (
-        lsh_candidate_pairs_grouped(bands, max_bucket_size=5)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    for op in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin",
-               "CartesianProduct", "BroadcastNestedLoopJoin", "Window"):
-        assert op not in plan, f"unexpected {op} in grouped-path plan"
-    n_bands = bands_plan.count("Exchange hashpartitioning")
-    n_ex = plan.count("Exchange hashpartitioning")
-    assert n_ex == n_bands + 1, (
-        f"grouped path should add exactly 1 aggregate exchange over the "
-        f"band-keys input ({n_bands}), saw {n_ex}"
-    )
-
-
 def test_cap_adds_no_extra_exchange(spark):
     """The window count partitions by (band, bucket_key) — exactly the
     self-join's key — so capping must not add an Exchange beyond the

@@ -36,17 +36,15 @@ def main() -> None:
     if "--sf-dir" in argv:
         sf_dir = argv[argv.index("--sf-dir") + 1]
 
-    from pyspark.sql import functions as F
-
     from wx20222_bigdata_spark.operators.clusters import (
         _split_by_cluster,
+        canonical_clusters,
         connected_components,
+        lsh_edges,
     )
     from wx20222_bigdata_spark.operators.dedup import (
         PROD_MAX_BUCKET_SIZE,
         _corpus_with_mutants_spark,
-        count_shared_bands,
-        lsh_candidate_pairs,
         minhash_band_keys,
     )
     from wx20222_bigdata_spark.session import get_spark
@@ -60,37 +58,27 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    def capped_verified_edges(bands):
-        return (
-            lsh_candidate_pairs(bands, max_bucket_size=PROD_MAX_BUCKET_SIZE)
-            .transform(count_shared_bands)
-            .filter(F.col("n_shared_bands") >= 2)
-            .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    def capped_labels(bands):
+        return connected_components(
+            lsh_edges(
+                bands, verified=True, max_bucket_size=PROD_MAX_BUCKET_SIZE
+            )
         )
 
     def run_e9d_char():
-        corpus = _corpus_with_mutants_spark(spark, sf_dir)
-        # e9d's body with whitespace=False: md5 oracle-fold shingles,
+        # e9d's core with whitespace=False: md5 oracle-fold shingles,
         # char {CHAR_SHINGLE_N}-grams — the bucket distribution that
         # produced the 17,727-doc bucket (oracle tier concentrates the
         # same way; the distribution is a property of the corpus).
-        comp = connected_components(
-            capped_verified_edges(minhash_band_keys(corpus, whitespace=False))
-        )
-        sizes = comp.groupBy("label").agg(F.count("*").alias("cluster_size"))
-        return comp.join(sizes, "label").select(
-            F.col("node").alias("doc_id"),
-            F.col("label").alias("cluster_id"),
-            F.col("cluster_size").cast("bigint").alias("cluster_size"),
-            (F.col("node") == F.col("label")).alias("is_canonical"),
+        corpus = _corpus_with_mutants_spark(spark, sf_dir)
+        return canonical_clusters(
+            capped_labels(minhash_band_keys(corpus, whitespace=False))
         )
 
     def run_o13b_char():
         corpus = _corpus_with_mutants_spark(spark, sf_dir)
-        comp = connected_components(
-            capped_verified_edges(
-                minhash_band_keys(corpus, production_hash=True, whitespace=False)
-            )
+        comp = capped_labels(
+            minhash_band_keys(corpus, production_hash=True, whitespace=False)
         )
         return _split_by_cluster(corpus, comp)
 

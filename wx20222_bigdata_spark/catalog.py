@@ -256,10 +256,6 @@ def _parse_byte_conf(value: str) -> int:
     return int(num) * mult
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so operators can use ``spark.sql``."""
     for name in TABLE_NAMES:

@@ -32,11 +32,34 @@ it); requiring ≥2 shared bands — the `n_shared_bands` column the e2*
 pair tiers already emit for free — recovers the exact planted structure
 (5,002 clusters, max 396, full coverage); ≥3 over-prunes (−7k docs).
 Use band-count ≥2 as the zero-cost filter, signature-estimated or exact
-Jaccard when the threshold needs calibrating. Of the declared queries
-below, e9/e9b/e28 keep the raw-candidate shape (the oracle mirrors it;
-fixture-scale graphs have no chance collisions) while e9c is the
-verified production shape — it applies the ≥2-shared-band edge filter
-before closure — see SCALE.md "Cluster resolution at sf10".
+Jaccard when the threshold needs calibrating — see SCALE.md "Cluster
+resolution at sf10".
+
+ONE CORE, THIN BINDINGS. Every seat here is band keys
+(``dedup.minhash_band_keys``, whose arguments pick the hash tier and
+shingle mode) → :func:`lsh_edges` → :func:`connected_components` → a
+tail. ``lsh_edges`` varies along the two axes the seats differ on —
+raw distinct candidates vs ``verified`` (≥2 shared bands), uncapped vs
+``max_bucket_size=PROD_MAX_BUCKET_SIZE`` — and the DuckDB side mirrors
+it with :func:`_duck_pairs` / :func:`_duck_components` over the same
+two flags:
+
+=====  ========  ======  =====================  ==============================
+seat   verified  capped  hash tier              tail
+=====  ========  ======  =====================  ==============================
+e9     no        no      md5 (oracle)           :func:`canonical_clusters`
+e9b    no        no      md5 (oracle)           triangle count (edges, no CC)
+e28    no        no      md5 (oracle)           keep-longest survivor ledger
+e9c    yes       no      md5 (oracle)           :func:`canonical_clusters`
+e9d    yes       yes     md5 (oracle)           :func:`canonical_clusters`
+o13    yes       no      md5 (oracle)           :func:`_split_by_cluster`
+o13b   yes       yes     xxhash64 (rows-only)   :func:`_split_by_cluster`
+=====  ========  ======  =====================  ==============================
+
+The raw shape stays on e9/e9b/e28 because fixture-scale graphs have no
+chance collisions; e9d is the production shape. The e2b/e2g/e2j/e2k/e2m
+pair seats (dedup.py) stop before the graph, at ``count_shared_bands``,
+and their oracles share one tail (``dedup._duck_pair_counts_oracle``).
 """
 
 from __future__ import annotations
@@ -49,6 +72,7 @@ from wx20222_bigdata_spark.operators.dedup import (
     PROD_MAX_BUCKET_SIZE,
     _corpus_with_mutants_spark,
     count_shared_bands,
+    duck_band_join,
     lsh_candidate_pairs,
     minhash_band_keys,
 )
@@ -150,15 +174,74 @@ def connected_components(
     return labels
 
 
-@query(
-    "e9_dedup_clusters",
-    oracle=f"""
-WITH RECURSIVE {LSH_BANDS_DUCK_CTES},
+def lsh_edges(
+    bands: DataFrame, *, verified: bool, max_bucket_size: int | None
+) -> DataFrame:
+    """Near-dup graph edges ``(src, dst)``, ``src < dst``, from band keys —
+    the front half every cluster seat shares.
+
+    ``verified=False`` keeps every distinct candidate pair (one edge per
+    pair, however many bands it shares); ``verified=True`` keeps only the
+    pairs sharing ≥2 bands — the verify-before-closure rule, whose
+    ``count_shared_bands`` groupBy already yields one row per pair.
+    ``max_bucket_size`` is passed to ``lsh_candidate_pairs``: ``None`` for
+    the oracle twins, ``PROD_MAX_BUCKET_SIZE`` for the capped tiers."""
+    pairs = lsh_candidate_pairs(bands, max_bucket_size=max_bucket_size)
+    if verified:
+        pairs = pairs.transform(count_shared_bands).filter(
+            F.col("n_shared_bands") >= 2
+        )
+    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    return edges if verified else edges.distinct()
+
+
+def canonical_clusters(comp: DataFrame) -> DataFrame:
+    """Shared e9/e9c/e9d tail: component labels ``(node, label)`` →
+    ``(doc_id, cluster_id, cluster_size, is_canonical)``, cluster id = min
+    doc_id of the component and its canonical survivor."""
+    sizes = comp.groupBy("label").agg(F.count("*").alias("cluster_size"))
+    return comp.join(sizes, "label").select(
+        F.col("node").alias("doc_id"),
+        F.col("label").alias("cluster_id"),
+        F.col("cluster_size").cast("bigint").alias("cluster_size"),
+        (F.col("node") == F.col("label")).alias("is_canonical"),
+    )
+
+
+def _duck_pairs(*, verified: bool, capped: bool) -> str:
+    """DuckDB mirror of :func:`lsh_edges`: the band-key CTEs, e9d's
+    window-count prune when ``capped``, then a ``pairs(id_a, id_b)`` CTE."""
+    ctes, src = LSH_BANDS_DUCK_CTES, "bands"
+    if capped:
+        ctes += f""",
+capped AS (
+  SELECT doc_id, band, bucket_key FROM (
+    SELECT doc_id, band, bucket_key,
+           COUNT(*) OVER (PARTITION BY band, bucket_key) AS _bsz
+    FROM bands
+  ) WHERE _bsz <= {PROD_MAX_BUCKET_SIZE}
+)"""
+        src = "capped"
+    if verified:
+        body = f"""SELECT a.doc_id AS id_a, b.doc_id AS id_b
+  {duck_band_join(src)}
+  GROUP BY a.doc_id, b.doc_id
+  HAVING COUNT(DISTINCT a.band) >= 2"""
+    else:
+        body = f"""SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  {duck_band_join(src)}"""
+    return f"""{ctes},
 pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bucket_key = b.bucket_key AND a.doc_id < b.doc_id
-),
+  {body}
+)"""
+
+
+def _duck_components(*, verified: bool, capped: bool) -> str:
+    """DuckDB mirror of ``connected_components(lsh_edges(...))``: a
+    ``WITH RECURSIVE`` chain ending in ``comp(doc_id, cluster_id)`` — the
+    same min-id fixpoint as recursive reachability → MIN(root)."""
+    return f"""
+WITH RECURSIVE {_duck_pairs(verified=verified, capped=capped)},
 edges AS (
   SELECT id_a AS u, id_b AS v FROM pairs
   UNION
@@ -171,12 +254,21 @@ reach(node, root) AS (
 ),
 comp AS (
   SELECT node AS doc_id, MIN(root) AS cluster_id FROM reach GROUP BY node
-)
+)"""
+
+
+#: DuckDB mirror of :func:`canonical_clusters` over ``comp``.
+_DUCK_CANONICAL = """
 SELECT doc_id, cluster_id,
        COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,
        doc_id = cluster_id AS is_canonical
 FROM comp
-""",
+"""
+
+
+@query(
+    "e9_dedup_clusters",
+    oracle=_duck_components(verified=False, capped=False) + _DUCK_CANONICAL,
 )
 def e9_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 cluster resolution end to end: the e2b LSH candidate pairs over
@@ -185,31 +277,16 @@ def e9_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (= min doc_id in the component), the cluster size, and whether it is
     the canonical survivor. Downstream dedup keeps ``is_canonical`` rows."""
     corpus = _corpus_with_mutants_spark(spark, sf_dir)
-    bands = minhash_band_keys(corpus)
-    pairs = (
-        lsh_candidate_pairs(bands)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .distinct()
+    edges = lsh_edges(
+        minhash_band_keys(corpus), verified=False, max_bucket_size=None
     )
-    comp = connected_components(pairs)
-    sizes = comp.groupBy("label").agg(F.count("*").alias("cluster_size"))
-    return comp.join(sizes, "label").select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("cluster_id"),
-        F.col("cluster_size").cast("bigint").alias("cluster_size"),
-        (F.col("node") == F.col("label")).alias("is_canonical"),
-    )
+    return canonical_clusters(connected_components(edges))
 
 
 @query(
     "e9b_triangle_count",
     oracle=f"""
-WITH {LSH_BANDS_DUCK_CTES},
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bucket_key = b.bucket_key AND a.doc_id < b.doc_id
-),
+WITH {_duck_pairs(verified=False, capped=False)},
 tri AS (
   SELECT e1.id_a AS a, e1.id_b AS b, e2.id_b AS c
   FROM pairs e1
@@ -227,18 +304,19 @@ def e9b_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate cluster; a bridge edge has none).
 
     Canonical distributed triangle counting: edges are already oriented
-    low→high (id_a < id_b from the pair join), so wedges come from ONE
+    low→high (src < dst from the pair join), so wedges come from ONE
     self-join on the middle vertex and close with an equi-join back onto
     the edge set — never an all-pairs expansion; shuffle is bounded by
     wedge count. At web scale you'd first re-orient edges by degree
     (lowest-degree vertex first) to bound wedges by arboricity — same
     two-join plan, different orientation rule."""
     corpus = _corpus_with_mutants_spark(spark, sf_dir)
-    bands = minhash_band_keys(corpus)
-    pairs = lsh_candidate_pairs(bands).select("id_a", "id_b").distinct()
-    e1 = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-    e2 = pairs.select(F.col("id_a").alias("b2"), F.col("id_b").alias("c"))
-    e3 = pairs.select(F.col("id_a").alias("a3"), F.col("id_b").alias("c3"))
+    edges = lsh_edges(
+        minhash_band_keys(corpus), verified=False, max_bucket_size=None
+    )
+    e1 = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    e2 = edges.select(F.col("src").alias("b2"), F.col("dst").alias("c"))
+    e3 = edges.select(F.col("src").alias("a3"), F.col("dst").alias("c3"))
     tri = (
         e1.join(e2, F.col("b2") == F.col("b"))
         .join(e3, (F.col("a3") == F.col("a")) & (F.col("c3") == F.col("c")))
@@ -253,26 +331,8 @@ def e9b_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "e28_cluster_survivors",
-    oracle=f"""
-WITH RECURSIVE {LSH_BANDS_DUCK_CTES},
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bucket_key = b.bucket_key AND a.doc_id < b.doc_id
-),
-edges AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION
-  SELECT id_b AS u, id_a AS v FROM pairs
-),
-reach(node, root) AS (
-  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-  UNION
-  SELECT e.v, r.root FROM reach r JOIN edges e ON e.u = r.node
-),
-comp AS (
-  SELECT node AS doc_id, MIN(root) AS cluster_id FROM reach GROUP BY node
-),
+    oracle=_duck_components(verified=False, capped=False)
+    + """,
 quality AS (
   SELECT comp.doc_id, cluster_id, length(corpus.text) AS n_chars
   FROM comp JOIN corpus ON comp.doc_id = corpus.doc_id
@@ -309,13 +369,10 @@ def e28_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle reuses e9's recursive-CTE reachability (landmine 15) with
     a quality-ranked window on top."""
     corpus = _corpus_with_mutants_spark(spark, sf_dir)
-    bands = minhash_band_keys(corpus)
-    pairs = (
-        lsh_candidate_pairs(bands)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .distinct()
+    edges = lsh_edges(
+        minhash_band_keys(corpus), verified=False, max_bucket_size=None
     )
-    comp = connected_components(pairs)
+    comp = connected_components(edges)
     quality = comp.join(
         corpus.select("doc_id", F.length("text").alias("n_chars")),
         comp.node == F.col("doc_id"),
@@ -345,33 +402,7 @@ def e28_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "e9c_verified_clusters",
-    oracle=f"""
-WITH RECURSIVE {LSH_BANDS_DUCK_CTES},
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bucket_key = b.bucket_key AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-  HAVING COUNT(DISTINCT a.band) >= 2
-),
-edges AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION
-  SELECT id_b AS u, id_a AS v FROM pairs
-),
-reach(node, root) AS (
-  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-  UNION
-  SELECT e.v, r.root FROM reach r JOIN edges e ON e.u = r.node
-),
-comp AS (
-  SELECT node AS doc_id, MIN(root) AS cluster_id FROM reach GROUP BY node
-)
-SELECT doc_id, cluster_id,
-       COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,
-       doc_id = cluster_id AS is_canonical
-FROM comp
-""",
+    oracle=_duck_components(verified=True, capped=False) + _DUCK_CANONICAL,
 )
 def e9c_verified_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9 with the VERIFY-BEFORE-CLOSURE rule applied — the production
@@ -386,59 +417,15 @@ def e9c_verified_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same output contract as e9: (doc_id, cluster_id, cluster_size,
     is_canonical), cluster id = min doc_id of the component."""
     corpus = _corpus_with_mutants_spark(spark, sf_dir)
-    bands = minhash_band_keys(corpus)
-    edges = (
-        lsh_candidate_pairs(bands)
-        .transform(count_shared_bands)
-        .filter(F.col("n_shared_bands") >= 2)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    edges = lsh_edges(
+        minhash_band_keys(corpus), verified=True, max_bucket_size=None
     )
-    comp = connected_components(edges)
-    sizes = comp.groupBy("label").agg(F.count("*").alias("cluster_size"))
-    return comp.join(sizes, "label").select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("cluster_id"),
-        F.col("cluster_size").cast("bigint").alias("cluster_size"),
-        (F.col("node") == F.col("label")).alias("is_canonical"),
-    )
+    return canonical_clusters(connected_components(edges))
 
 
 @query(
     "e9d_verified_clusters_capped",
-    oracle=f"""
-WITH RECURSIVE {LSH_BANDS_DUCK_CTES},
-capped AS (
-  SELECT doc_id, band, bucket_key FROM (
-    SELECT doc_id, band, bucket_key,
-           COUNT(*) OVER (PARTITION BY band, bucket_key) AS _bsz
-    FROM bands
-  ) WHERE _bsz <= {PROD_MAX_BUCKET_SIZE}
-),
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM capped a JOIN capped b
-    ON a.band = b.band AND a.bucket_key = b.bucket_key AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-  HAVING COUNT(DISTINCT a.band) >= 2
-),
-edges AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION
-  SELECT id_b AS u, id_a AS v FROM pairs
-),
-reach(node, root) AS (
-  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-  UNION
-  SELECT e.v, r.root FROM reach r JOIN edges e ON e.u = r.node
-),
-comp AS (
-  SELECT node AS doc_id, MIN(root) AS cluster_id FROM reach GROUP BY node
-)
-SELECT doc_id, cluster_id,
-       COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,
-       doc_id = cluster_id AS is_canonical
-FROM comp
-""",
+    oracle=_duck_components(verified=True, capped=True) + _DUCK_CANONICAL,
 )
 def e9d_verified_clusters_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """e9c with FREQUENT-BUCKET PRUNING in front of the verify join — the
@@ -470,47 +457,18 @@ def e9d_verified_clusters_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same output contract as e9/e9c: (doc_id, cluster_id, cluster_size,
     is_canonical), cluster id = min doc_id of the component."""
     corpus = _corpus_with_mutants_spark(spark, sf_dir)
-    bands = minhash_band_keys(corpus)
-    edges = (
-        lsh_candidate_pairs(bands, max_bucket_size=PROD_MAX_BUCKET_SIZE)
-        .transform(count_shared_bands)
-        .filter(F.col("n_shared_bands") >= 2)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    edges = lsh_edges(
+        minhash_band_keys(corpus),
+        verified=True,
+        max_bucket_size=PROD_MAX_BUCKET_SIZE,
     )
-    comp = connected_components(edges)
-    sizes = comp.groupBy("label").agg(F.count("*").alias("cluster_size"))
-    return comp.join(sizes, "label").select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("cluster_id"),
-        F.col("cluster_size").cast("bigint").alias("cluster_size"),
-        (F.col("node") == F.col("label")).alias("is_canonical"),
-    )
+    return canonical_clusters(connected_components(edges))
 
 
 @query(
     "o13_cluster_aware_split",
-    oracle=f"""
-WITH RECURSIVE {LSH_BANDS_DUCK_CTES},
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bucket_key = b.bucket_key AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-  HAVING COUNT(DISTINCT a.band) >= 2
-),
-edges AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION
-  SELECT id_b AS u, id_a AS v FROM pairs
-),
-reach(node, root) AS (
-  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-  UNION
-  SELECT e.v, r.root FROM reach r JOIN edges e ON e.u = r.node
-),
-comp AS (
-  SELECT node AS doc_id, MIN(root) AS cluster_id FROM reach GROUP BY node
-),
+    oracle=_duck_components(verified=True, capped=False)
+    + """,
 assigned AS (
   SELECT c.doc_id, COALESCE(k.cluster_id, c.doc_id) AS cluster_id
   FROM corpus c LEFT JOIN comp k USING (doc_id)
@@ -549,15 +507,10 @@ def o13_cluster_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     inherit the uniform md5 bucket distribution — each CLUSTER (not
     each doc) is the Bernoulli unit, the price of leakage safety."""
     corpus = _corpus_with_mutants_spark(spark, sf_dir)
-    bands = minhash_band_keys(corpus)
-    edges = (
-        lsh_candidate_pairs(bands)
-        .transform(count_shared_bands)
-        .filter(F.col("n_shared_bands") >= 2)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    edges = lsh_edges(
+        minhash_band_keys(corpus), verified=True, max_bucket_size=None
     )
-    comp = connected_components(edges)
-    return _split_by_cluster(corpus, comp)
+    return _split_by_cluster(corpus, connected_components(edges))
 
 
 def _split_by_cluster(corpus: DataFrame, comp: DataFrame) -> DataFrame:
@@ -608,15 +561,10 @@ def o13b_cluster_split_production(
     bucket may drop an edge the oracle tier kept, splitting a chance
     chain — acceptable at scale (such buckets carry no discriminating
     signal), and exactly why the cap is production-only."""
-    from wx20222_bigdata_spark.operators.dedup import PROD_MAX_BUCKET_SIZE
-
     corpus = _corpus_with_mutants_spark(spark, sf_dir)
-    bands = minhash_band_keys(corpus, production_hash=True)
-    edges = (
-        lsh_candidate_pairs(bands, max_bucket_size=PROD_MAX_BUCKET_SIZE)
-        .transform(count_shared_bands)
-        .filter(F.col("n_shared_bands") >= 2)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    edges = lsh_edges(
+        minhash_band_keys(corpus, production_hash=True),
+        verified=True,
+        max_bucket_size=PROD_MAX_BUCKET_SIZE,
     )
-    comp = connected_components(edges)
-    return _split_by_cluster(corpus, comp)
+    return _split_by_cluster(corpus, connected_components(edges))

@@ -264,41 +264,6 @@ def _shingle_hashes(
     return shingles.select("doc_id", h.alias("h"))
 
 
-def _permuted_shingle_hashes(
-    corpus: DataFrame, production_hash: bool = False, whitespace: bool = True
-) -> tuple[DataFrame, "F.Column"]:
-    """:func:`_shingle_hashes` with the permutation index exploded:
-    (doc_id, h, j) rows and the h_j = (a_j*h + b_j) mod p column — for
-    consumers that need raw per-permutation rows (signature export).
-    The LSH band path does NOT use this (16 aggregates beat a ×16
-    explode — see :func:`minhash_band_keys`)."""
-    hashed = _shingle_hashes(
-        corpus, production_hash=production_hash, whitespace=whitespace
-    )
-    a_arr = F.array([F.lit(a) for a in MINHASH_A[:N_HASHES]])
-    b_arr = F.array([F.lit(b) for b in MINHASH_B[:N_HASHES]])
-    perms = hashed.select(
-        "doc_id",
-        "h",
-        F.explode(F.sequence(F.lit(0), F.lit(N_HASHES - 1))).alias("j"),
-    )
-    hj = (
-        F.element_at(a_arr, F.col("j") + 1) * F.col("h")
-        + F.element_at(b_arr, F.col("j") + 1)
-    ) % MOD
-    return perms, hj
-
-
-def minhash_signatures(corpus: DataFrame) -> DataFrame:
-    """(doc_id, j, minhash) signature rows — the generic MinHash output
-    for consumers that need raw signatures (similarity estimation).
-    The LSH query itself uses the fused ``minhash_band_keys``."""
-    perms, hj = _permuted_shingle_hashes(corpus)
-    return perms.select("doc_id", "j", hj.alias("hj")).groupBy("doc_id", "j").agg(
-        F.min("hj").alias("minhash")
-    )
-
-
 def minhash_band_keys(
     corpus: DataFrame, production_hash: bool = False, whitespace: bool = True
 ) -> DataFrame:
@@ -346,14 +311,12 @@ def minhash_band_keys(
 
 
 def lsh_candidate_pairs(
-    bands: DataFrame,
-    max_bucket_size: int | None = None,
-    cap_mode: str = "window",
+    bands: DataFrame, max_bucket_size: int | None = None
 ) -> DataFrame:
     """Candidate pairs from band keys: ``(id_a, id_b, band)`` — one row
     per shared (band, bucket) collision with ``id_a < id_b``. The single
-    pair-generation implementation behind e2b/e2j/e2g and the cluster
-    resolvers (e9/e9b/e28).
+    pair-generation implementation behind the e2b/e2g/e2j/e2m pair seats
+    and, through ``clusters.lsh_edges``, every cluster resolver.
 
     ``max_bucket_size`` enables **frequent-bucket pruning**, the standard
     guard for web-scale corpora: a degenerate bucket of B documents
@@ -368,7 +331,10 @@ def lsh_candidate_pairs(
     is linear in B. Bucket sizes come from ONE window count over
     (band, bucket_key); that exchange hash-partitions the bands exactly
     as the self-join needs, so the pruning adds no extra shuffle —
-    both join branches reuse it.
+    both join branches reuse it. The window count is the only cap: a
+    broadcast anti-join of over-cap buckets and a join-free grouped
+    path were both measured slower at sf10 and removed (SCALE.md "LSH
+    cap pre-count A/B" and "LSH at sf10").
 
     Default ``None`` keeps every bucket — the oracle-checked tiers
     (DuckDB mirrors an uncapped join) and the sf* fixtures use that.
@@ -379,37 +345,14 @@ def lsh_candidate_pairs(
     other ``N_BANDS − 1`` bands unless those buckets are degenerate
     too."""
     if max_bucket_size is not None:
-        if cap_mode == "semijoin":
-            # Alternative cap plan (r6 verdict item 7 A/B): map-side-
-            # combinable groupBy count -> over-cap blacklist ->
-            # broadcast anti-join. The n_band_rows / cap bound on the
-            # blacklist is corpus-LINEAR in the worst case (ADVICE r7),
-            # so the broadcast is only safe when degenerate buckets are
-            # rare — in practice the blacklist is a handful of rows, but
-            # this mode stays EXPERIMENT-ONLY (measured and rejected for
-            # the production tiers, SCALE.md r7: it loses to the window
-            # pre-count at sf10 on both tiers); the band rows themselves
-            # are never pre-shuffled.
-            over = (
-                bands.groupBy("band", "bucket_key")
-                .agg(F.count("*").alias("_bsz"))
-                .filter(F.col("_bsz") > max_bucket_size)
-                .select("band", "bucket_key")
-            )
-            bands = bands.join(
-                F.broadcast(over), ["band", "bucket_key"], "left_anti"
-            )
-        elif cap_mode == "window":
-            from pyspark.sql import Window
+        from pyspark.sql import Window
 
-            w = Window.partitionBy("band", "bucket_key")
-            bands = (
-                bands.withColumn("_bsz", F.count("*").over(w))
-                .filter(F.col("_bsz") <= max_bucket_size)
-                .drop("_bsz")
-            )
-        else:
-            raise ValueError(f"unknown cap_mode {cap_mode!r}")
+        w = Window.partitionBy("band", "bucket_key")
+        bands = (
+            bands.withColumn("_bsz", F.count("*").over(w))
+            .filter(F.col("_bsz") <= max_bucket_size)
+            .drop("_bsz")
+        )
     a = bands.select(
         F.col("doc_id").alias("id_a"),
         F.col("band").alias("band"),
@@ -445,52 +388,6 @@ def count_shared_bands(pairs: DataFrame) -> DataFrame:
     return pairs.groupBy("id_a", "id_b").agg(
         F.count("*").alias("n_shared_bands")
     )
-
-
-def lsh_candidate_pairs_grouped(
-    bands: DataFrame, max_bucket_size: int
-) -> DataFrame:
-    """``lsh_candidate_pairs`` semantics with a mandatory bucket cap, in
-    ONE exchange and NO self-join: band rows group into their bucket
-    (``collect_list`` of doc ids), degenerate buckets are dropped by the
-    same rule as ``max_bucket_size`` in the join path, and the surviving
-    buckets emit their intra-bucket pairs from the grouped array.
-
-    MEASURED AND REJECTED for the production tiers (kept as an
-    independent semantic mirror — tests pin its pair set bit-equal to
-    the join path). The hypothesis was that the capped join path pays
-    for re-deriving the shingle pipeline per join branch plus the window
-    pre-count; in fact at sf10 (48 GiB heap, local[32], medians of 3)
-    this path LOST to the capped self-join on both modes — word 138.3 s
-    vs 22.6 s, char 45.2 s vs 30.8 s. The join streams pair rows out of
-    codegen, while this path materializes each bucket's B·(B−1)/2 pair
-    structs as ONE array value before exploding (cap 500 → 125k structs
-    per hot bucket): allocation + GC on the array dominates everything
-    the single exchange saves. Negative result recorded in SCALE.md
-    "LSH at sf10"; use :func:`lsh_candidate_pairs` (capped) in
-    production, :func:`lsh_candidate_pairs_salted` when hot-but-legit
-    buckets skew reducers.
-
-    Output column contract matches ``lsh_candidate_pairs``:
-    (id_a, id_b, band) with id_a < id_b, one row per shared band."""
-    grouped = (
-        bands.groupBy("band", "bucket_key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(
-            (F.size("ids") >= 2) & (F.size("ids") <= max_bucket_size)
-        )
-    )
-    pairs = grouped.select(
-        "band",
-        F.explode(
-            F.expr(
-                "flatten(transform(sequence(1, size(ids) - 1), i -> "
-                "transform(sequence(0, i - 1), j -> "
-                "struct(ids[j] AS id_a, ids[i] AS id_b))))"
-            )
-        ).alias("p"),
-    )
-    return pairs.select("p.id_a", "p.id_b", "band")
 
 
 def lsh_candidate_pairs_salted(
@@ -587,9 +484,9 @@ def lsh_candidate_pairs_salted(
 
 def _lsh_bands_duck_ctes(whitespace: bool = True) -> str:
     """The full DuckDB LSH front half (corpus → shingles → minhash → band
-    keys) as a reusable CTE chain — e2b/e2j compose their pair join on
-    top, and the cluster-resolution oracle (operators/clusters.py)
-    extends it with a recursive reachability CTE. ``whitespace=False``
+    keys) as a reusable CTE chain — the e2b/e2j/e2k pair oracles put
+    :func:`duck_band_join` on top, and the cluster-resolution oracles
+    (operators/clusters.py) extend it with a recursive reachability CTE. ``whitespace=False``
     mirrors the char-shingle (CJK) path."""
     if whitespace:
         toks = f"""toksrc AS (
@@ -633,15 +530,29 @@ bands AS (
 LSH_BANDS_DUCK_CTES = _lsh_bands_duck_ctes(True)
 
 
+def duck_band_join(bands: str) -> str:
+    """DuckDB mirror of :func:`lsh_candidate_pairs`' self-join over the
+    band-key relation ``bands``: one row per shared (band, bucket)
+    collision with ``a.doc_id < b.doc_id``."""
+    return f"""FROM {bands} a JOIN {bands} b
+  ON a.band = b.band AND a.bucket_key = b.bucket_key AND a.doc_id < b.doc_id"""
+
+
+def _duck_pair_counts_oracle(whitespace: bool) -> str:
+    """Oracle of the uncapped ``(id_a, id_b, n_shared_bands)`` pair seats:
+    e2b, its salted twin e2k (same pair set by construction) and the
+    char-shingle e2j."""
+    return f"""
+WITH {_lsh_bands_duck_ctes(whitespace)}
+SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(DISTINCT a.band) AS n_shared_bands
+{duck_band_join("bands")}
+GROUP BY a.doc_id, b.doc_id
+"""
+
+
 @query(
     "e2b_minhash_lsh_pairs",
-    oracle=f"""
-WITH {LSH_BANDS_DUCK_CTES}
-SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(DISTINCT a.band) AS n_shared_bands
-FROM bands a JOIN bands b
-  ON a.band = b.band AND a.bucket_key = b.bucket_key AND a.doc_id < b.doc_id
-GROUP BY a.doc_id, b.doc_id
-""",
+    oracle=_duck_pair_counts_oracle(whitespace=True),
 )
 def e2b_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 MinHash-LSH near-dup candidate pairs, end to end: distinct tokens
@@ -665,13 +576,7 @@ def e2b_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "e2k_salted_lsh_pairs",
-    oracle=f"""
-WITH {LSH_BANDS_DUCK_CTES}
-SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(DISTINCT a.band) AS n_shared_bands
-FROM bands a JOIN bands b
-  ON a.band = b.band AND a.bucket_key = b.bucket_key AND a.doc_id < b.doc_id
-GROUP BY a.doc_id, b.doc_id
-""",
+    oracle=_duck_pair_counts_oracle(whitespace=True),
 )
 def e2k_salted_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 MinHash-LSH pairs through the SKEW tier
@@ -692,13 +597,7 @@ def e2k_salted_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "e2j_char_shingle_lsh_pairs",
-    oracle=f"""
-WITH {_lsh_bands_duck_ctes(whitespace=False)}
-SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(DISTINCT a.band) AS n_shared_bands
-FROM bands a JOIN bands b
-  ON a.band = b.band AND a.bucket_key = b.bucket_key AND a.doc_id < b.doc_id
-GROUP BY a.doc_id, b.doc_id
-""",
+    oracle=_duck_pair_counts_oracle(whitespace=False),
 )
 def e2j_char_shingle_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 MinHash-LSH in char-shingle mode (``whitespace=False``) — the
@@ -810,7 +709,7 @@ def e2c_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("e2g_minhash_lsh_production")
 def e2g_minhash_lsh_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 MinHash-LSH on the PRODUCTION hash tier (xxhash64, 3× faster
-    than the cross-engine fold — see _permuted_shingle_hashes). Rows-only:
+    than the cross-engine fold — see _shingle_hashes). Rows-only:
     bucket ids are engine-specific; recall is still observable — the
     seeded mutants must collide (tested). Runs with the production
     frequent-bucket cap (PROD_MAX_BUCKET_SIZE): candidate volume stays

@@ -67,20 +67,23 @@ def macro_f1(preds: DataFrame, truth: str, pred: str) -> DataFrame:
     full-outer semantics; the per-class arithmetic is unchanged
     (2.0 * tp / (n_true + n_pred) over the same integer counts).
 
-    NULL-class-id nuance (r12 verdict, documented not changed): the
-    unpivot groups NULL truth/pred ids into ONE class row, where the
-    old full-outer-join form produced two (nulls never equi-join).
-    Unobservable here — every registered caller derives class ids from
-    non-null dictionary codes, and the DuckDB oracles' own ``FULL JOIN
-    USING (class_id)`` has the same null-keyed two-row semantics as the
-    join form — so parity holds by construction; a caller with nullable
-    class columns should filter nulls on both engines first."""
+    Class ids must be non-NULL: the unpivot would group NULL truth and
+    pred ids into ONE class row, where the full-outer-join form (and
+    the DuckDB oracles) keep two. A NULL id raises inside the plan
+    (``raise_error`` in the same projection — no extra job); filter
+    nulls on both engines first."""
+
+    def class_id(c: str):
+        return F.coalesce(
+            F.col(c), F.raise_error(F.lit(f"macro_f1: NULL class id in {c!r}"))
+        )
+
     per_class = (
         preds.select(
             F.explode(
                 F.array(
                     F.struct(
-                        F.col(truth).alias("c"),
+                        class_id(truth).alias("c"),
                         F.lit(1).alias("t"),
                         F.lit(0).alias("p"),
                         F.when(F.col(truth) == F.col(pred), 1)
@@ -88,7 +91,7 @@ def macro_f1(preds: DataFrame, truth: str, pred: str) -> DataFrame:
                         .alias("tp"),
                     ),
                     F.struct(
-                        F.col(pred).alias("c"),
+                        class_id(pred).alias("c"),
                         F.lit(0).alias("t"),
                         F.lit(1).alias("p"),
                         F.lit(0).alias("tp"),

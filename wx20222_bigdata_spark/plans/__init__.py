@@ -22,10 +22,6 @@ def formatted_plan(df: DataFrame) -> str:
     return _explain(df, "formatted")
 
 
-def simple_plan(df: DataFrame) -> str:
-    return _explain(df, "simple")
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """PushedFilters entries across every parquet scan in the plan."""
     out: list[str] = []
@@ -45,25 +41,8 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df) or "BroadcastNestedLoopJoin" in formatted_plan(df)
 
 
-def has_cartesian(df: DataFrame) -> bool:
-    return "CartesianProduct" in formatted_plan(df)
-
-
 def has_take_ordered(df: DataFrame) -> bool:
     return "TakeOrderedAndProject" in formatted_plan(df)
-
-
-def shuffle_count(df: DataFrame) -> int:
-    """Number of shuffle exchanges in the final plan (AQE may reduce at
-    runtime; this counts the static plan)."""
-    plan = formatted_plan(df)
-    return plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return len(re.findall(r"WholeStageCodegen", formatted_plan(df)))
 
 
 #: signature column of each SF-scaled table (grows with the corpus).

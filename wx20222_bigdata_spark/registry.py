@@ -47,68 +47,67 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # CORRECTNESS row yet — plus anything new/changed this round — get checked
 # before already-driver-verified ones. See NOTES_r2.md.
 _FRONT: list[str] = [
-    # Round-12 rotation (r11 verdict item 1): seats CHANGED this round
-    # first (e17 gained the E17_PAIR_BUDGET pre-flight guard — behavior
-    # at fixture scale unchanged, re-front to prove it), then the ENTIRE
-    # 30-seat r07-stale cohort in registration order (21 of the 30 were
-    # independently re-verified green by the r11 judge's own drive-sim;
-    # all 226 were green in the r11 closing full-registry sim), then the
-    # 19 oldest r08 seats in registration order to fill the 50-seat
-    # window. After this round the staleness floor rises to r08 (29 r08
-    # seats remain for the r13 rotation).
-    # --- CHANGED this round ---
-    "e17_semantic_dedup",
-    # --- r07-stale cohort (complete, registration order) ---
-    "a15_value_histogram",
-    "m4_incremental_agg",
-    "x8_hll_sketch_union",
-    "a16_regression_stats",
-    "a17_winsorized_stats",
-    "m5_changefeed_apply",
-    "s9f_stream_static_enrich",
-    "t8_grouping_sets",
-    "t9_date_spine",
-    "t5b_unpivot",
-    "e4_group_stats",
-    "e4b_token_freq_topk",
-    "e4c_language_id",
-    "e4d_quality_score",
-    "e4e_doc_fingerprint",
-    "e4f_token_count",
-    "e11_repetition_filter",
-    "e15_pii_redaction",
-    "e19_unigram_logprob",
-    "e22_feature_hashing",
-    "f7_vocab_tokenize",
-    "e21_bpe_pair_counts",
-    "e27b_bpe_nospacing",
-    "e27_bpe_apply",
-    "w7_gap_fill",
-    "w8_rolling_zscore",
-    "w9_sessionization",
-    "w10_rank_surface",
-    "w11_cumulative_actives",
-    "w12_range_frame",
-    # --- oldest r08 seats in registration order (fill to 50) ---
-    "e32_paragraph_dedup",
+    # Rotation after the r13 window (the r13 rotation itself was skipped):
+    # first the 12 near-dup seats rebuilt this round as bindings of the
+    # one MinHash-LSH -> connected-components core (clusters.lsh_edges),
+    # in registration order; then the ENTIRE 29-seat cohort last
+    # driver-verified in r08 (per CORRECTNESS_r*.json), in registration
+    # order; then the oldest r09 seats in registration order to fill the
+    # 50-seat window. After this round the staleness floor rises to r09
+    # (38 r09 seats remain for the next rotation).
+    # --- CHANGED this round (near-dup core) ---
+    "e2b_minhash_lsh_pairs",
+    "e2k_salted_lsh_pairs",
+    "e2j_char_shingle_lsh_pairs",
+    "e2g_minhash_lsh_production",
+    "e2m_char_lsh_production",
+    "e9_dedup_clusters",
+    "e9b_triangle_count",
+    "e28_cluster_survivors",
+    "e9c_verified_clusters",
+    "e9d_verified_clusters_capped",
     "o13_cluster_aware_split",
     "o13b_cluster_split_production",
-    "f20_robust_scale",
-    "s11_schema_evolution",
-    "e12b_temperature_mixture",
-    "prof1_table_profile",
-    "q17_small_quantity_revenue",
-    "j5_outer_join_family",
-    "q10_returned_items",
-    "q12_priority_shipping",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q19_discounted_revenue",
-    "q21_sole_supplier_orders",
-    "q13_customer_distribution",
-    "q20_part_promotion_suppliers",
-    "q2_min_cost_supplier",
+    # --- r08-stale cohort (complete, registration order) ---
+    "q11_important_stock",
+    "p1_flatten_concat",
+    "p2_derive_drop",
+    "p3_dict_encode",
+    "p4_dict_decode",
+    "p5_prefix_projection",
+    "p7_substring_predicates",
+    "p8_conditional_gates",
+    "s1_json_roundtrip",
+    "s4_csv_line_parse",
+    "f_string_surface",
+    "f16_datetime_json",
+    "f_null_semantics",
+    "f_conditional_fns",
+    "dq1_constraint_report",
+    "o10_hash_split",
+    "o15_epoch_repeat_schedule",
+    "e35b_hyperplane_semdedup_production",
+    "j1b_scalable_zip_index",
+    "m1_upsert_merge",
+    "m2_scd2_history",
+    "m6_deletion_propagation",
+    "e36_substring_span_trim",
+    "e37_containment_pairs",
+    "e36b_span_trim_production",
+    "e37b_containment_prefix_production",
+    "t10_decay_weighted_value",
+    "a10_swa_snapshot_avg",
+    "o6_ntile_kfold",
+    # --- oldest r09 seats in registration order (fill to 50) ---
+    "a5_masked_mean_pool",
+    "a6_last4_mean",
+    "a8_argmax",
+    "a7_ensemble_argmax",
+    "e1_exact_dedup",
+    "e1b_dedup_survivors",
+    "e7d_dedup_funnel",
+    "x6_map_in_arrow",
+    "i4_bfs_levels",
 ]
 
 

@@ -2,7 +2,7 @@
 
 The production tier moves ONLY the sign-bit computation into an
 Arrow-batched matmul; banding, pair join, cosine and keep tail are the
-shared ``_hp_prune_from_sig``. These laws pin the claim that the move is
+shared ``_hp_prune``. These laws pin the claim that the move is
 value-preserving: band keys agree bit-for-bit on the fixture corpus
 (numpy's accumulation order could in principle flip a sign only when
 |dot| is within ~1e-13 of zero — if a future fixture ever lands there,
@@ -156,7 +156,7 @@ def test_e35c_cap_binds_on_saturated_bucket(spark):
         "rn", F.row_number().over(Window.partitionBy("band", "bkey").orderBy("vec_id"))
     ).filter(F.col("rn") <= HP_CAP)
     assert reps.count() == sd.HP_BANDS * HP_CAP  # cap binds: n=3*CAP members, CAP reps/band
-    out = sd._hp_prune_capped(sig).toPandas().set_index("vec_id")
+    out = sd._hp_prune(sig, cap=HP_CAP).toPandas().set_index("vec_id")
     # keep-min-id preserved: only vec 0 survives, everyone else sees
     # representative #1 at cosine 1.0 and is pruned
     assert bool(out.loc[0, "is_kept"]) is True

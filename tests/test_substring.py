@@ -19,7 +19,7 @@ _RUN = "r1 r2 r3 r4 r5 r6 r7 r8"  # 8-token shared run
 
 def _trim(spark, rows):
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = span_trim(df).toPandas().set_index("doc_id")
+    out = span_trim(df, hashed=False).toPandas().set_index("doc_id")
     return out
 
 
@@ -183,7 +183,7 @@ def test_e36_matches_pure_python_reference_on_random_corpora(spark):
             spans = sum(1 for p in cov if p - 1 not in cov)
             want[d] = (len(ws), len(cov), spans)
         got = span_trim(
-            spark.createDataFrame(docs, "doc_id long, text string")
+            spark.createDataFrame(docs, "doc_id long, text string"), hashed=False
         ).toPandas().set_index("doc_id")
         for d in toks:
             row = got.loc[d]

@@ -86,14 +86,15 @@ def _update(assigned: DataFrame) -> DataFrame:
 #: Shared DuckDB CTE chain producing ``a2`` = the final (vec_id, k, d)
 #: assignment after two Lloyd iterations — reused verbatim by e14 and the
 #: SemDeDup prune (operators/semdedup.py) so both oracles share one spec.
-LLOYD2_CTES = f"""init AS (
+LLOYD2_CTES = f"""emb AS (SELECT * FROM embeddings WHERE embedding IS NOT NULL),
+init AS (
   SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS k,
          [CAST(embedding[i] AS DOUBLE) for i in range(1, {DIM + 1})] AS c_arr
-  FROM (SELECT * FROM embeddings ORDER BY vec_id LIMIT {K})
+  FROM (SELECT * FROM emb ORDER BY vec_id LIMIT {K})
 ),
 s1 AS (
   SELECT e.vec_id, e.embedding, c.k, {_DUCK_SQDIST} AS d
-  FROM embeddings e, init c
+  FROM emb e, init c
 ),
 a1 AS (
   SELECT vec_id, embedding, k
@@ -112,7 +113,7 @@ cent1d AS (
 cent1 AS (SELECT k, list(c ORDER BY i) AS c_arr FROM cent1d GROUP BY k),
 s2 AS (
   SELECT e.vec_id, c.k, {_DUCK_SQDIST} AS d
-  FROM embeddings e, cent1 c
+  FROM emb e, cent1 c
 ),
 a2 AS (
   SELECT vec_id, k, d
@@ -125,8 +126,17 @@ a2 AS (
 def lloyd2_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two deterministic Lloyd iterations over the embedding corpus;
     returns the final assignment frame (vec_id, embedding, k, d). The
-    Spark twin of :data:`LLOYD2_CTES`."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    Spark twin of :data:`LLOYD2_CTES`.
+
+    Vectors with a NULL embedding have no position, so they are left out
+    of the clustering (and of the output) in both engines. Kept in, the
+    engines would disagree: Spark sorts a NULL distance first and DuckDB
+    last, and only DuckDB counts NULL members in a centroid's mean."""
+    emb = (
+        load_table(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding")
+        .filter(F.col("embedding").isNotNull())
+    )
     # K-row deterministic init: lowest vec_ids, ranked into cluster ids.
     # The global window ranks K rows (bounded) — pinned exempt in
     # test_plans alongside the other bounded aggregate tables.

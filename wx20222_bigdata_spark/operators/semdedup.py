@@ -20,6 +20,17 @@ prune is a map-side-combinable ``max`` aggregate plus one broadcast-size
 left join back. At 100 TB you raise K so clusters stay O(10³)-sized
 (SemDeDup uses K≈100k for LAION-scale corpora) and let AQE split hot
 clusters; the threshold comes from the recall curve, not from taste.
+
+The centroid-free hyperplane family is one core with four bindings:
+:func:`_hp_sig_frame` builds the banded signature (``numpy=`` picks the
+flat-SQL or the Arrow numpy kernel), :func:`_hp_prune` runs the banded
+self-join and keep tail (``cap=`` picks the full join or the
+representative cap), and :func:`_duck_hp` emits the oracle.
+
+- e35: flat-SQL kernel, ``cap=None``;
+- e35b: numpy kernel, ``cap=None`` (same oracle as e35);
+- e35c: numpy kernel, ``cap=HP_CAP`` (``reps`` oracle);
+- e35d: picks e35b or e35c from a sampled pair-volume probe.
 """
 
 from __future__ import annotations
@@ -274,7 +285,19 @@ def _emb_corpus_with_mutants(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionByName(mutants)
 
 
-_E35_ORACLE = f"""
+def _duck_hp(*, cap: int | None) -> str:
+    """DuckDB oracle of the hyperplane tiers: signature → band rows →
+    banded self-join → per-vector max lower-id cosine → keep flag. With
+    ``cap`` the right side of the join is the bucket's ``cap``
+    lowest-vec_id representatives (e35c); ``None`` is the uncapped join
+    shared by e35, e35b and e35d."""
+    rhs, r = ("bands", "b") if cap is None else ("reps", "r")
+    reps = "" if cap is None else f"""
+reps AS (
+  SELECT * FROM bands
+  QUALIFY ROW_NUMBER() OVER (PARTITION BY band, bkey ORDER BY vec_id) <= {cap}
+),"""
+    return f"""
 WITH corpus AS ({_CORPUS_DUCK_EMB}),
 sig AS (
   SELECT vec_id, embedding,
@@ -284,13 +307,13 @@ sig AS (
 ),
 bands AS (
   {' UNION ALL '.join(f'SELECT vec_id, embedding, nrm, {b} AS band, band{b} AS bkey FROM sig' for b in range(HP_BANDS))}
-),
+),{reps}
 pairs AS (
   SELECT a.vec_id AS ia,
-         list_sum([a.embedding[i] * b.embedding[i] for i in range(1, {DIM + 1})])
-           / (a.nrm * b.nrm) AS cosine
-  FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
-                            AND b.vec_id < a.vec_id
+         list_sum([a.embedding[i] * {r}.embedding[i] for i in range(1, {DIM + 1})])
+           / (a.nrm * {r}.nrm) AS cosine
+  FROM bands a JOIN {rhs} {r} ON a.band = {r}.band AND a.bkey = {r}.bkey
+                            AND {r}.vec_id < a.vec_id
 ),
 lower_max AS (SELECT ia, MAX(cosine) AS mc FROM pairs GROUP BY ia)
 SELECT s.vec_id,
@@ -298,6 +321,9 @@ SELECT s.vec_id,
        COALESCE(l.mc, -1.0) < {TAU_HP} AS is_kept
 FROM sig s LEFT JOIN lower_max l ON l.ia = s.vec_id
 """
+
+
+_E35_ORACLE = _duck_hp(cap=None)
 
 
 @query("e35_hyperplane_semdedup", oracle=_E35_ORACLE)
@@ -322,47 +348,68 @@ def e35_hyperplane_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     mutants (cosine ≈ 0.999) make the prune observable; recall vs the
     exact e3-style all-pairs truth is floor-asserted in
     tests/test_similarity_recall.py."""
+    return _hp_prune(_hp_sig_frame(spark, sf_dir, numpy=False), cap=None)
+
+
+def _hp_sig_frame(spark: SparkSession, sf_dir: str, *, numpy: bool) -> DataFrame:
+    """The materialized (vec_id, embedding, nrm, band0..band{HP_BANDS-1})
+    signature frame of the mutant corpus. ``numpy`` picks the sign-bit
+    kernel: the Arrow-batched matmul (e35b/e35c) or flat-SQL plane dots
+    (e35, the Spark-side reference the tier-equality law compares e35b
+    against).
+
+    The signature is materialized once (eager localCheckpoint at
+    plan-build) so the self-join and the final join-back reference the
+    computed table instead of duplicating the expression tree per
+    branch — without this the duplicated codegen OOMs a default-heap
+    driver, and at scale this is the "write the sketch table, then join
+    it" layout every fingerprint pipeline uses (6.4 → 0.37 s sf0.1
+    across the two rewrites). The flat-SQL signature is TWO projections
+    — plane-dot array, then sign/pack (see _hp_band_from_planes for why
+    one flat expression de-JITs)."""
     from wx20222_bigdata_spark.plans.caching import materialize
 
-    corpus = _emb_corpus_with_mutants(spark, sf_dir)
-    # The signature is materialized once (eager localCheckpoint at
-    # plan-build) so the self-join and the final join-back reference the
-    # computed table instead of duplicating the expression tree per
-    # branch — without this the duplicated codegen OOMs a default-heap
-    # driver, and at scale this is the "write the sketch table, then
-    # join it" layout every fingerprint pipeline uses (6.4 → 0.37 s
-    # sf0.1 across the two rewrites). The signature itself is TWO
-    # projections — plane-dot array, then sign/pack (see
-    # _hp_band_from_planes for why one flat expression de-JITs).
-    planes = corpus.select(
-        "vec_id",
-        "embedding",
-        norm("embedding").alias("nrm"),
-        F.array(
+    if numpy:
+        bits = _hp_sig_udf()("embedding").alias("bk")
+        keys = [F.col("bk")[b] for b in range(HP_BANDS)]
+    else:
+        bits = F.array(
             *[F.expr(_hp_plane_dot_spark(j)) for j in range(HP_PLANES)]
-        ).alias("pl"),
-    )
-    sig = materialize(
-        planes.select(
+        ).alias("pl")
+        keys = [
+            F.expr(_hp_band_from_planes(b)).cast("int") for b in range(HP_BANDS)
+        ]
+    corpus = _emb_corpus_with_mutants(spark, sf_dir)
+    return materialize(
+        corpus.select(
+            "vec_id", "embedding", norm("embedding").alias("nrm"), bits
+        ).select(
             "vec_id",
             "embedding",
             "nrm",
-            *[
-                F.expr(_hp_band_from_planes(b)).cast("int").alias(f"band{b}")
-                for b in range(HP_BANDS)
-            ],
+            *[k.alias(f"band{b}") for b, k in enumerate(keys)],
         )
     )
-    return _hp_prune_from_sig(sig)
 
 
-def _hp_prune_from_sig(sig: DataFrame) -> DataFrame:
-    """Shared e35/e35b tail: band explode → banded self-join → per-vector
-    max lower-id cosine → keep flag. ``sig`` must carry (vec_id,
-    embedding, nrm, band0..band{HP_BANDS-1}); the cosine is computed from
-    ``embedding`` directly, so the two tiers' OUTPUT values are identical
-    whenever their sign bits agree (the signature only selects which
-    pairs are compared)."""
+def _hp_numpy_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The e35b/e35c signature frame (numpy kernel)."""
+    return _hp_sig_frame(spark, sf_dir, numpy=True)
+
+
+def _hp_prune(sig: DataFrame, *, cap: int | None) -> DataFrame:
+    """Shared tail of every hyperplane tier: band explode → banded
+    self-join → per-vector max lower-id cosine → keep flag. ``sig`` must
+    carry (vec_id, embedding, nrm, band0..band{HP_BANDS-1}); the cosine
+    is computed from ``embedding`` directly, so two tiers' OUTPUT values
+    are identical whenever their sign bits agree (the signature only
+    selects which pairs are compared).
+
+    ``cap=None`` joins every bucket-mate (e35/e35b). ``cap=HP_CAP``
+    joins each member only against its bucket's ``cap`` lowest-vec_id
+    representatives (e35c) — a ``row_number() <= cap`` filter on the
+    right side; the saturated-bucket laws drive it on hand-built
+    frames."""
     bands = sig.select(
         "vec_id",
         "embedding",
@@ -378,6 +425,14 @@ def _hp_prune_from_sig(sig: DataFrame) -> DataFrame:
             )
         ).alias("bb"),
     ).select("vec_id", "embedding", "nrm", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
+    reps = bands
+    if cap is not None:
+        from pyspark.sql.window import Window
+
+        reps = bands.withColumn(
+            "rn",
+            F.row_number().over(Window.partitionBy("band", "bkey").orderBy("vec_id")),
+        ).filter(F.col("rn") <= cap)
     a = bands.select(
         F.col("vec_id").alias("ia"),
         F.col("embedding").alias("ea"),
@@ -385,7 +440,7 @@ def _hp_prune_from_sig(sig: DataFrame) -> DataFrame:
         "band",
         "bkey",
     )
-    b = bands.select(
+    b = reps.select(
         F.col("vec_id").alias("ib"),
         F.col("embedding").alias("eb"),
         F.col("nrm").alias("nb"),
@@ -413,40 +468,14 @@ def _hp_prune_from_sig(sig: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "e35b_hyperplane_semdedup_production",
-    oracle=f"""
-WITH corpus AS ({_CORPUS_DUCK_EMB}),
-sig AS (
-  SELECT vec_id, embedding,
-         sqrt(list_sum([embedding[i] * embedding[i] for i in range(1, {DIM + 1})])) AS nrm,
-         {', '.join(f'CAST({_hp_band_duck(b)} AS INT) AS band{b}' for b in range(HP_BANDS))}
-  FROM corpus
-),
-bands AS (
-  {' UNION ALL '.join(f'SELECT vec_id, embedding, nrm, {b} AS band, band{b} AS bkey FROM sig' for b in range(HP_BANDS))}
-),
-pairs AS (
-  SELECT a.vec_id AS ia,
-         list_sum([a.embedding[i] * b.embedding[i] for i in range(1, {DIM + 1})])
-           / (a.nrm * b.nrm) AS cosine
-  FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
-                            AND b.vec_id < a.vec_id
-),
-lower_max AS (SELECT ia, MAX(cosine) AS mc FROM pairs GROUP BY ia)
-SELECT s.vec_id,
-       ROUND(COALESCE(l.mc, -1.0), 6) AS max_lower_cosine,
-       COALESCE(l.mc, -1.0) < {TAU_HP} AS is_kept
-FROM sig s LEFT JOIN lower_max l ON l.ia = s.vec_id
-""",
-)
+@query("e35b_hyperplane_semdedup_production", oracle=_E35_ORACLE)
 def e35b_hyperplane_semdedup_production(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """E35's production signature tier: the 64 hyperplane dots as ONE
     Arrow-batched numpy matmul (``E @ Wᵀ`` + bit-pack) instead of ~4k
     flat SQL arithmetic nodes per row. Same banding, same pair join,
-    same cosine/keep tail (shared ``_hp_prune_from_sig``) — only the
+    same cosine/keep tail (shared ``_hp_prune``) — only the
     sign-bit computation moves to the vectorized kernel, the same
     split the text LSH family uses (e2b oracle hash vs e2g xxhash64).
 
@@ -467,7 +496,7 @@ def e35b_hyperplane_semdedup_production(
     seat is fully hash-checked), and tests/test_semdedup_tiers.py pins
     band-key equality tier-vs-tier so any future drift fails loudly in
     pytest before a driver round sees it."""
-    return _hp_prune_from_sig(_hp_numpy_sig_frame(spark, sf_dir))
+    return _hp_prune(_hp_numpy_sig_frame(spark, sf_dir), cap=None)
 
 
 def _hp_sig_udf():
@@ -475,53 +504,31 @@ def _hp_sig_udf():
     production signature frame (e35b/e35c) and the e35d saturation
     probe. The kernel is a NESTED closure (the /verify cross-cwd rule:
     executors don't have the repo on sys.path when the driver runs from
-    another cwd)."""
+    another cwd). A NULL embedding gets band key 0 in every band — what
+    the flat-SQL tier and the DuckDB oracle give it, since a NULL plane
+    dot is never ``> 0``."""
     from pyspark.sql.functions import pandas_udf
 
     w_t = np.array(_HP_W, dtype=np.float64).T  # DIM x HP_PLANES
 
     @pandas_udf("array<int>")
     def _hp_sig(embs: pd.Series) -> pd.Series:
-        if embs.empty:
-            return pd.Series([], dtype=object)
-        e = np.stack(embs.to_numpy())  # m x DIM float64
-        signs = (e @ w_t) > 0  # m x HP_PLANES
-        pow2 = 1 << np.arange(HP_BITS, dtype=np.int64)
-        keys = np.stack(
-            [
-                (signs[:, b * HP_BITS : (b + 1) * HP_BITS] @ pow2).astype(
-                    np.int32
-                )
-                for b in range(HP_BANDS)
-            ],
-            axis=1,
-        )
-        return pd.Series(list(keys))
+        present = embs.notna().to_numpy()
+        keys = np.zeros((len(embs), HP_BANDS), dtype=np.int32)
+        if present.any():
+            e = np.stack(embs[present].to_numpy())  # m x DIM float64
+            signs = (e @ w_t) > 0  # m x HP_PLANES
+            pow2 = 1 << np.arange(HP_BITS, dtype=np.int64)
+            keys[present] = np.stack(
+                [
+                    signs[:, b * HP_BITS : (b + 1) * HP_BITS] @ pow2
+                    for b in range(HP_BANDS)
+                ],
+                axis=1,
+            )
+        return pd.Series(list(keys), dtype=object)
 
     return _hp_sig
-
-
-def _hp_numpy_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared e35b/e35c signature builder: the materialized
-    (vec_id, embedding, nrm, band0..band{HP_BANDS-1}) frame with sign
-    bits computed by the Arrow-batched numpy matmul."""
-    from wx20222_bigdata_spark.plans.caching import materialize
-
-    _hp_sig = _hp_sig_udf()
-    corpus = _emb_corpus_with_mutants(spark, sf_dir)
-    return materialize(
-        corpus.select(
-            "vec_id",
-            "embedding",
-            norm("embedding").alias("nrm"),
-            _hp_sig("embedding").alias("bk"),
-        ).select(
-            "vec_id",
-            "embedding",
-            "nrm",
-            *[F.col("bk")[b].alias(f"band{b}") for b in range(HP_BANDS)],
-        )
-    )
 
 
 #: Per-(band, key) representative cap for the e35c tier. A bucket of n
@@ -532,37 +539,7 @@ def _hp_numpy_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 HP_CAP = 32
 
 
-@query(
-    "e35c_hyperplane_semdedup_capped",
-    oracle=f"""
-WITH corpus AS ({_CORPUS_DUCK_EMB}),
-sig AS (
-  SELECT vec_id, embedding,
-         sqrt(list_sum([embedding[i] * embedding[i] for i in range(1, {DIM + 1})])) AS nrm,
-         {', '.join(f'CAST({_hp_band_duck(b)} AS INT) AS band{b}' for b in range(HP_BANDS))}
-  FROM corpus
-),
-bands AS (
-  {' UNION ALL '.join(f'SELECT vec_id, embedding, nrm, {b} AS band, band{b} AS bkey FROM sig' for b in range(HP_BANDS))}
-),
-reps AS (
-  SELECT * FROM bands
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY band, bkey ORDER BY vec_id) <= {HP_CAP}
-),
-pairs AS (
-  SELECT a.vec_id AS ia,
-         list_sum([a.embedding[i] * r.embedding[i] for i in range(1, {DIM + 1})])
-           / (a.nrm * r.nrm) AS cosine
-  FROM bands a JOIN reps r ON a.band = r.band AND a.bkey = r.bkey
-                           AND r.vec_id < a.vec_id
-),
-lower_max AS (SELECT ia, MAX(cosine) AS mc FROM pairs GROUP BY ia)
-SELECT s.vec_id,
-       ROUND(COALESCE(l.mc, -1.0), 6) AS max_lower_cosine,
-       COALESCE(l.mc, -1.0) < {TAU_HP} AS is_kept
-FROM sig s LEFT JOIN lower_max l ON l.ia = s.vec_id
-""",
-)
+@query("e35c_hyperplane_semdedup_capped", oracle=_duck_hp(cap=HP_CAP))
 def e35c_hyperplane_semdedup_capped(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -588,73 +565,7 @@ def e35c_hyperplane_semdedup_capped(
     buckets larger than {HP_CAP} (their reported max is over the reps
     only). Law: identical to e35b wherever every bucket ≤ {HP_CAP}
     (asserted on the fixture in tests/test_semdedup_tiers.py)."""
-    return _hp_prune_capped(_hp_numpy_sig_frame(spark, sf_dir))
-
-
-def _hp_prune_capped(sig: DataFrame) -> DataFrame:
-    """e35c's representative-join tail over any signature frame — split
-    out (like ``_hp_prune_from_sig``) so the saturated-bucket laws can
-    drive it on hand-built frames."""
-    from pyspark.sql.window import Window
-
-    bands = sig.select(
-        "vec_id",
-        "embedding",
-        "nrm",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), F.col(f"band{b}").alias("bkey")
-                    )
-                    for b in range(HP_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select(
-        "vec_id", "embedding", "nrm",
-        F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"),
-    )
-    reps = (
-        bands.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("band", "bkey").orderBy("vec_id")
-            ),
-        )
-        .filter(F.col("rn") <= HP_CAP)
-        .select(
-            F.col("vec_id").alias("ib"),
-            F.col("embedding").alias("eb"),
-            F.col("nrm").alias("nb"),
-            F.col("band").alias("band_b"),
-            F.col("bkey").alias("bkey_b"),
-        )
-    )
-    a = bands.select(
-        F.col("vec_id").alias("ia"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-        "band",
-        "bkey",
-    )
-    cos = dot_fixed("ea", "eb", DIM) / (F.col("na") * F.col("nb"))
-    lower_max = (
-        a.join(
-            reps,
-            (F.col("band") == F.col("band_b"))
-            & (F.col("bkey") == F.col("bkey_b"))
-            & (F.col("ib") < F.col("ia")),
-        )
-        .groupBy("ia")
-        .agg(F.max(cos).alias("mc"))
-    )
-    mc = F.coalesce("mc", F.lit(-1.0))
-    return sig.join(lower_max, sig.vec_id == lower_max.ia, "left").select(
-        "vec_id",
-        F.round(mc, 6).alias("max_lower_cosine"),
-        (mc < F.lit(TAU_HP)).alias("is_kept"),
-    )
+    return _hp_prune(_hp_numpy_sig_frame(spark, sf_dir), cap=HP_CAP)
 
 
 # --- e35d: tier choice as code (the r9 verdict's last "What's wrong") ---

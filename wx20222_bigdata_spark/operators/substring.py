@@ -23,6 +23,16 @@ explode); the per-doc span count reuses the (doc, pos) partitioning laid
 down by the distinct. At web scale the gram key would be the 60-bit md5
 prefix (functions/hashing.py, cf. e2's production tiers) — the literal
 text key here keeps the oracle readable at fixture scale.
+
+Each tier family is one core with thin bindings:
+
+- span trim — :func:`span_trim` (``hashed=`` picks the text or md5 gram
+  key) and :func:`_duck_span` for the oracle: e36 is ``hashed=False``,
+  e36b ``hashed=True``, e36c picks one by corpus size;
+- containment — :func:`_snippet_corpus` feeds :func:`containment_on`
+  (e37) or :func:`containment_prefix_on` (e37b), both over
+  :func:`_grams_sizes_rare`; the two oracles share the
+  ``_DUCK_CONTAIN_PREFIX`` CTEs; e37c picks a tier by corpus size.
 """
 
 from __future__ import annotations
@@ -38,20 +48,25 @@ from wx20222_bigdata_spark.registry import query
 K = 5  #: token-window width; Lee et al. use 50 BPE tokens — 5 fits fixture docs
 
 
-_E36_ORACLE = f"""
+def _duck_span(*, hashed: bool) -> str:
+    """DuckDB oracle of the span-trim tiers: the gram key is the literal
+    {K}-token text (e36) or its 60-bit md5-prefix BIGINT (e36b)."""
+    gram = f"array_to_string(ws[j:j + {K - 1}], ' ')"
+    key, col = (duck_md5_hash(gram), "gh") if hashed else (gram, "g")
+    return f"""
 WITH words AS (
   SELECT doc_id,
          list_filter(string_split(lower(text), ' '), x -> length(x) > 0) AS ws
   FROM documents
 ),
 occ AS (
-  SELECT doc_id, j, array_to_string(ws[j:j + {K - 1}], ' ') AS g
+  SELECT doc_id, j, {key} AS {col}
   FROM words, LATERAL (SELECT unnest(range(1, len(ws) - {K - 2})) AS j)
   WHERE len(ws) >= {K}
 ),
 dup AS (
   SELECT doc_id, j FROM (
-    SELECT doc_id, j, COUNT(*) OVER (PARTITION BY g) AS cnt FROM occ
+    SELECT doc_id, j, COUNT(*) OVER (PARTITION BY {col}) AS cnt FROM occ
   ) WHERE cnt >= 2
 ),
 cov AS (
@@ -80,6 +95,9 @@ FROM base b LEFT JOIN cagg c USING (doc_id)
 """
 
 
+_E36_ORACLE = _duck_span(hashed=False)
+
+
 @query("e36_substring_span_trim", oracle=_E36_ORACLE)
 def e36_substring_span_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E36 exact-substring span trim — per document: total token count,
@@ -89,15 +107,22 @@ def e36_substring_span_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     the number of maximal contiguous covered spans, and the covered
     fraction. ``n_tokens - n_dup_tokens`` is the post-trim length; the
     integer ratio rounds cross-engine exact (e33 precedent)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return span_trim(docs)
+    return span_trim(_documents(spark, sf_dir), hashed=False)
 
 
-def span_trim(docs: DataFrame) -> DataFrame:
-    """Core of e36 over an arbitrary ``(doc_id, text)`` frame — split out
-    so the span laws (full coverage of a seeded verbatim run, overlapping
-    grams merging into one span, sub-K docs emitting nothing) are testable
-    on hand-built corpora (tests/test_substring.py)."""
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "documents").select("doc_id", "text")
+
+
+def span_trim(docs: DataFrame, *, hashed: bool) -> DataFrame:
+    """Span-trim core of e36/e36b over an arbitrary ``(doc_id, text)``
+    frame — split out so the span laws (full coverage of a seeded
+    verbatim run, overlapping grams merging into one span, sub-K docs
+    emitting nothing) are testable on hand-built corpora
+    (tests/test_substring.py). ``hashed`` picks the gram key the one big
+    window exchange partitions on: the literal {K}-token text ``g`` (e36)
+    or its 60-bit md5-prefix BIGINT ``gh`` (e36b)."""
+    key = "gh" if hashed else "g"
     words = docs.select(
         "doc_id",
         F.expr("filter(split(lower(text), ' '), x -> length(x) > 0)").alias("ws"),
@@ -115,10 +140,14 @@ def span_trim(docs: DataFrame) -> DataFrame:
                 )
             ).alias("o"),
         )
-        .select("doc_id", "o.j", "o.g")
+        .select(
+            "doc_id",
+            "o.j",
+            F.expr(spark_md5_hash("o.g")).alias(key) if hashed else "o.g",
+        )
     )
     dup = occ.withColumn(
-        "cnt", F.count("*").over(Window.partitionBy("g"))
+        "cnt", F.count("*").over(Window.partitionBy(key))
     ).filter(F.col("cnt") >= 2)
     cov = dup.select(
         "doc_id", F.explode(F.expr(f"sequence(j, j + {K - 1})")).alias("pos")
@@ -158,7 +187,9 @@ C_DF_CAP = 50        #: drop grams indexed by more docs (boilerplate guard)
 C_THRESHOLD = 0.8    #: report pairs with containment >= this
 
 
-_E37_ORACLE = f"""
+#: DuckDB CTEs shared by the e37 and e37b oracles: snippet corpus,
+#: DISTINCT {K}-gram shingles per doc and per-doc gram counts.
+_DUCK_CONTAIN_PREFIX = f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents
   UNION ALL
@@ -179,7 +210,9 @@ grams AS (
   WHERE len(ws) >= {K}
 ),
 sizes AS (SELECT doc_id, COUNT(*) AS n_grams FROM grams GROUP BY doc_id),
-rare AS (
+"""
+
+_E37_ORACLE = _DUCK_CONTAIN_PREFIX + f"""rare AS (
   SELECT doc_id, g FROM (
     SELECT doc_id, g, COUNT(*) OVER (PARTITION BY g) AS df FROM grams
   ) WHERE df BETWEEN 2 AND {C_DF_CAP}
@@ -228,7 +261,14 @@ def e37_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     df (the e36/e16/e19 one-exchange form), a capped self-equi-join on
     the gram, one pair aggregate, two bounded size joins (AQE-governed;
     sizes is per-doc, SF-scaled, never hinted)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return containment_on(_snippet_corpus(spark, sf_dir))
+
+
+def _snippet_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The e37/e37b corpus: every document plus a snippet mutant (its
+    first {C_SNIP_LEN} tokens, id + {C_SNIP_OFFSET}) of every
+    {C_SNIP_MOD}th."""
+    docs = _documents(spark, sf_dir)
     snippets = docs.filter(F.col("doc_id") % C_SNIP_MOD == 0).select(
         (F.col("doc_id") + C_SNIP_OFFSET).alias("doc_id"),
         F.expr(
@@ -236,8 +276,7 @@ def e37_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" x -> length(x) > 0), 1, {C_SNIP_LEN}))"
         ).alias("text"),
     )
-    corpus = docs.unionByName(snippets)
-    return containment_on(corpus)
+    return docs.unionByName(snippets)
 
 
 def _grams_sizes_rare(
@@ -310,50 +349,7 @@ def containment_on(corpus: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "e36b_span_trim_production",
-    oracle=f"""
-WITH words AS (
-  SELECT doc_id,
-         list_filter(string_split(lower(text), ' '), x -> length(x) > 0) AS ws
-  FROM documents
-),
-occ AS (
-  SELECT doc_id, j,
-         {duck_md5_hash("array_to_string(ws[j:j + " + str(K - 1) + "], ' ')")} AS gh
-  FROM words, LATERAL (SELECT unnest(range(1, len(ws) - {K - 2})) AS j)
-  WHERE len(ws) >= {K}
-),
-dup AS (
-  SELECT doc_id, j FROM (
-    SELECT doc_id, j, COUNT(*) OVER (PARTITION BY gh) AS cnt FROM occ
-  ) WHERE cnt >= 2
-),
-cov AS (
-  SELECT DISTINCT doc_id, j + d AS pos
-  FROM dup, LATERAL (SELECT unnest(range(0, {K})) AS d)
-),
-runs AS (
-  SELECT doc_id,
-         CASE WHEN lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) = pos - 1
-              THEN 0 ELSE 1 END AS run_start
-  FROM cov
-),
-cagg AS (
-  SELECT doc_id, COUNT(*) AS n_dup_tokens, SUM(run_start) AS n_spans
-  FROM runs GROUP BY doc_id
-),
-base AS (SELECT doc_id, len(ws) AS n_tokens FROM words)
-SELECT b.doc_id,
-       CAST(b.n_tokens AS BIGINT) AS n_tokens,
-       CAST(COALESCE(c.n_dup_tokens, 0) AS BIGINT) AS n_dup_tokens,
-       CAST(COALESCE(c.n_spans, 0) AS BIGINT) AS n_spans,
-       CASE WHEN b.n_tokens > 0
-            THEN ROUND(COALESCE(c.n_dup_tokens, 0) * 1.0 / b.n_tokens, 6)
-       END AS dup_fraction
-FROM base b LEFT JOIN cagg c USING (doc_id)
-""",
-)
+@query("e36b_span_trim_production", oracle=_duck_span(hashed=True))
 def e36b_span_trim_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E36b — e36's docstring scale claim as a measured path: the gram
     key is the 60-bit md5-prefix BIGINT (functions/hashing.py) instead
@@ -365,85 +361,12 @@ def e36b_span_trim_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, and a collision only ever OVER-marks a span — conservative
     in a trim pass). Same plan shape as e36; measured exchange-byte
     delta recorded in SCALE.md."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    words = docs.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> length(x) > 0)").alias("ws"),
-    )
-    occ = (
-        words.filter(F.expr(f"size(ws) >= {K}"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, size(ws) - {K - 1}),"
-                    f" j -> struct(j AS j, concat_ws(' ', slice(ws, j, {K})) AS g))"
-                )
-            ).alias("o"),
-        )
-        .select(
-            "doc_id",
-            "o.j",
-            F.expr(spark_md5_hash("o.g")).alias("gh"),
-        )
-    )
-    dup = occ.withColumn(
-        "cnt", F.count("*").over(Window.partitionBy("gh"))
-    ).filter(F.col("cnt") >= 2)
-    cov = dup.select(
-        "doc_id", F.explode(F.expr(f"sequence(j, j + {K - 1})")).alias("pos")
-    ).distinct()
-    runs = cov.withColumn(
-        "run_start",
-        F.when(
-            F.lag("pos").over(Window.partitionBy("doc_id").orderBy("pos"))
-            == F.col("pos") - 1,
-            0,
-        ).otherwise(1),
-    )
-    cagg = runs.groupBy("doc_id").agg(
-        F.count("*").alias("n_dup_tokens"),
-        F.sum("run_start").alias("n_spans"),
-    )
-    base = words.select("doc_id", F.size("ws").alias("n_tokens"))
-    return base.join(cagg, "doc_id", "left").select(
-        "doc_id",
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.coalesce("n_dup_tokens", F.lit(0)).cast("bigint").alias("n_dup_tokens"),
-        F.coalesce("n_spans", F.lit(0)).cast("bigint").alias("n_spans"),
-        F.when(
-            F.col("n_tokens") > 0,
-            F.round(
-                F.coalesce("n_dup_tokens", F.lit(0)) / F.col("n_tokens"), 6
-            ),
-        ).alias("dup_fraction"),
-    )
+    return span_trim(_documents(spark, sf_dir), hashed=True)
 
 
 @query(
     "e37b_containment_prefix_production",
-    oracle=f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + {C_SNIP_OFFSET} AS doc_id,
-         array_to_string(
-           list_filter(string_split(lower(text), ' '),
-                       x -> length(x) > 0)[1:{C_SNIP_LEN}], ' ') AS text
-  FROM documents WHERE doc_id % {C_SNIP_MOD} = 0
-),
-words AS (
-  SELECT doc_id,
-         list_filter(string_split(lower(text), ' '), x -> length(x) > 0) AS ws
-  FROM corpus
-),
-grams AS (
-  SELECT DISTINCT doc_id, array_to_string(ws[j:j + {K - 1}], ' ') AS g
-  FROM words, LATERAL (SELECT unnest(range(1, len(ws) - {K - 2})) AS j)
-  WHERE len(ws) >= {K}
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_grams FROM grams GROUP BY doc_id),
-rare AS (
+    oracle=_DUCK_CONTAIN_PREFIX + f"""rare AS (
   SELECT doc_id, g, df FROM (
     SELECT doc_id, g, COUNT(*) OVER (PARTITION BY g) AS df FROM grams
   ) WHERE df BETWEEN 2 AND {C_DF_CAP}
@@ -503,16 +426,7 @@ def e37b_containment_prefix_production(spark: SparkSession, sf_dir: str) -> Data
     tiebreak); plan: the df window + one rank window, the prefix⋈rare
     equi-join, then AQE-governed verify joins (gram arrays are per-doc
     bounded)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    snippets = docs.filter(F.col("doc_id") % C_SNIP_MOD == 0).select(
-        (F.col("doc_id") + C_SNIP_OFFSET).alias("doc_id"),
-        F.expr(
-            "concat_ws(' ', slice(filter(split(lower(text), ' '),"
-            f" x -> length(x) > 0), 1, {C_SNIP_LEN}))"
-        ).alias("text"),
-    )
-    corpus = docs.unionByName(snippets)
-    return containment_prefix_on(corpus)
+    return containment_prefix_on(_snippet_corpus(spark, sf_dir))
 
 
 def prefix_index_on(rare: DataFrame, sizes: DataFrame) -> DataFrame:
